@@ -20,30 +20,56 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# reclaim dead superstep checkpoint blocks promptly — the ContextCleaner
+# only acts after a JVM GC, and a large heap may not GC for many minutes
+# on its own (default interval is 30min; too frequent and the forced
+# full GC itself stalls queries)
+PERIODIC_GC = {"spark.cleaner.periodicGC.interval": "2min"}
 
 
-def main() -> None:
+def _driver_memory(share: float = 0.5) -> str:
+    """``share`` of the machine's ``MemTotal`` (``/proc/meminfo``) as a
+    driver-heap setting; ``4g`` where that file is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{int(kb * share) >> 10}m"
+
+
+def _session(app: str, confs: dict | None = None):
+    """The local session a bench mode runs on: ``local[CPUS]`` with
+    ``CPUS`` shuffle partitions, AQE and Arrow on, the UI off and half
+    the machine's memory as driver heap; ``confs`` add or override."""
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        # reclaim dead superstep checkpoint blocks promptly — the
-        # ContextCleaner only acts after a JVM GC, and a 32g heap may not
-        # GC for many minutes on its own (default interval is 30min; too
-        # frequent and the forced full GC itself stalls queries)
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
+        .appName(app)
+        .config(
+            map={
+                "spark.sql.shuffle.partitions": CPUS,
+                "spark.sql.adaptive.enabled": "true",
+                "spark.sql.execution.arrow.pyspark.enabled": "true",
+                "spark.driver.memory": _driver_memory(),
+                "spark.ui.enabled": "false",
+                "spark.ui.showConsoleProgress": "false",
+                **(confs or {}),
+            }
+        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> None:
+    from pyspark.sql import functions as F
+
+    spark = _session("giraph-spark-bench", PERIODIC_GC)
 
     import giraph_spark as gs
     from giraph_spark.algos.components import wcc
@@ -391,24 +417,11 @@ def stress() -> None:
     and record the per-superstep profile as evidence (BASELINE.md
     "Scale-stress profile"). Size via $SPARK_GRAFT_STRESS_V /
     $SPARK_GRAFT_STRESS_EPV (default 1.25M × 8 = 10M edges)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     n_v = int(os.environ.get("SPARK_GRAFT_STRESS_V", "1250000"))
     epv = int(os.environ.get("SPARK_GRAFT_STRESS_EPV", "8"))
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-stress", PERIODIC_GC)
 
     import giraph_spark as gs
     from giraph_spark.algos.components import wcc
@@ -738,21 +751,7 @@ def pipeline() -> None:
     the measured evidence behind BASELINE.md's pipeline table; the same
     tier rides the DEFAULT bench output (main) as the "pipeline"
     section."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-pipeline-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-pipeline-bench", PERIODIC_GC)
     timings, rows, inputs = _run_pipeline(spark, SF_DIR)
     print(
         json.dumps(
@@ -785,23 +784,10 @@ def stress_docs() -> None:
     K²; semdedup scales ``num_cells`` ∝ corpus (the paper's own scaling
     rule) so per-cell pair work stays bounded. Size via
     $SPARK_GRAFT_STRESS_DOCS_K (default 10)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     k_rep = int(os.environ.get("SPARK_GRAFT_STRESS_DOCS_K", "10"))
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress-docs")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-stress-docs", PERIODIC_GC)
 
     from giraph_spark.functions.dedup import dedup_corpus, minhash_lsh_pairs
     from giraph_spark.functions.similarity import semdedup
@@ -943,22 +929,10 @@ def stress_warc() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     k_rep = int(os.environ.get("SPARK_GRAFT_STRESS_WARC_K", "10"))
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress-warc")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-stress-warc")
 
     from giraph_spark.functions.pipeline import clean_corpus
     from giraph_spark.sources.warc import read_warc, wet_documents, write_warc
@@ -1047,21 +1021,11 @@ def stress_stream() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stream-stress")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = _session(
+        "giraph-spark-stream-stress", {"spark.sql.adaptive.enabled": "false"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from giraph_spark.plans.fixtures import read_events
     from giraph_spark.streaming.corpus import clean_corpus_stream
@@ -1203,21 +1167,7 @@ def _run_extras(spark, sf_dir: str) -> tuple[dict, dict]:
 def graph_extras() -> None:
     """Standalone extras run (``python bench.py --graph-extras``) — the
     same tier the default bench now embeds, in its own session."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-graph-extras")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-graph-extras", PERIODIC_GC)
     queries, counters = _run_extras(spark, SF_DIR)
     print(
         json.dumps(
@@ -1247,25 +1197,12 @@ def stress_extras() -> None:
     giant cycle + DAG cross-edges — whose layer count is
     scale-invariant by construction (scc.py:21's specific unknown).
     Size via $SPARK_GRAFT_STRESS_V / _EPV (defaults 125k × 8 at 1×)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     n_base = int(os.environ.get("SPARK_GRAFT_STRESS_V", "1250000")) // 10
     epv = int(os.environ.get("SPARK_GRAFT_STRESS_EPV", "8"))
     k_scale = int(os.environ.get("SPARK_GRAFT_STRESS_EXTRAS_K", "10"))
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress-extras")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-stress-extras", PERIODIC_GC)
 
     from giraph_spark.algos.coloring import graph_coloring
     from giraph_spark.algos.independent_set import maximal_independent_set
@@ -1473,23 +1410,11 @@ def stress_crawl() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     k_rep = int(os.environ.get("SPARK_GRAFT_STRESS_CRAWL_K", "10"))
     n_base = int(os.environ.get("SPARK_GRAFT_STRESS_CRAWL_N", "20000"))
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress-crawl")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("giraph-spark-stress-crawl")
 
     from giraph_spark.functions.crawl import crawl_rounds, schedule_frontier
     from giraph_spark.functions.urls import crawl_delays, parse_robots
@@ -1633,19 +1558,13 @@ def stress_hash() -> None:
     import json as _json
     import time as _time
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("giraph-spark-stress-hash")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = _session(
+        "giraph-spark-stress-hash",
+        {
+            "spark.sql.execution.arrow.pyspark.enabled": "false",
+            "spark.driver.memory": _driver_memory(0.25),
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 
     from giraph_spark.functions.audiohash import (

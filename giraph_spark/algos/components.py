@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..pregel import MSG, PregelMetrics, pregel
 from ..plans.checkpoint import fresh_checkpoint
+from ..plans.gear import LoopGear, session_width, width_for
 
 
 def _label_propagation(
@@ -143,24 +144,17 @@ def alternating_star_components(
     sort/except join. Lineage is truncated per round (localCheckpoint),
     the same plan-growth discipline as the pregel loop.
     """
-    from ..pregel import _auto_partitions
-
     spark = graph.vertices.sparkSession
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
 
-    # same data-sized shuffle-partition discipline as the pregel kernel
-    # (restored on exit); every round's groupBys/joins agree on one count
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_auto_partitions(graph, int(parts_before))),
-    )
-    try:
+    # the kernel's loop discipline: one data-sized width for every
+    # round's groupBys/joins, and AQE off because each round ends in a
+    # localCheckpoint (both restored on exit; see plans/gear.py)
+    width = width_for(graph.edges.count(), session_width(spark))
+    with LoopGear(spark, width=width):
         return _alternating_star_impl(
             graph, spark, id_col, src_col, dst_col, max_rounds, component_col
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
 
 
 def _alternating_star_impl(

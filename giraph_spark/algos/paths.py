@@ -38,10 +38,10 @@ def sssp(
     Scale notes: one shuffle per superstep for the ``groupBy(dst).min``
     inbox (map-side partial min = Giraph's message combiner, free from
     Catalyst) plus the triplet join keyed on vertex id. The active set
-    shrinks monotonically once the frontier passes; the kernel's adaptive
-    gear-down (``pregel(adaptive_partitions=True)``) shrinks the loop's
-    shuffle width with it, so tail supersteps don't pay full-width task
-    counts for near-empty frontiers.
+    shrinks monotonically once the frontier passes; the kernel's
+    :class:`~giraph_spark.plans.gear.LoopGear` shrinks the loop's shuffle
+    width with it, so tail supersteps don't pay full-width task counts
+    for near-empty frontiers.
     """
     id_col = graph.id_col
     w = F.col(weight_col) if weight_col else F.lit(1.0)

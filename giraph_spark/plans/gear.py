@@ -1,57 +1,90 @@
-"""Adaptive shuffle-width gear-down for driver-side round loops.
+"""The one place that sizes a loop's shuffle width and writes the
+session's ``spark.sql.shuffle.partitions`` / ``spark.sql.adaptive.enabled``.
 
-The pregel kernel re-sizes its shuffle width every superstep from the
-live message volume (``pregel.py`` step 9 — the r4 fix for sssp's
-convergence tail, where 14 supersteps each paid 32-task scheduling to
-move a handful of frontier rows). The standalone round loops — Borůvka
-MSF, the two matchings, Jones–Plassmann coloring, Luby MIS, k-truss
-peeling, FW-BW SCC — have the same shape: a live set that SHRINKS
-monotonically every round, with each round paying one-or-two shuffles
-sized for the full graph long after the live set has collapsed.
-This module is the kernel's gear-down extracted for those loops.
+Every iterative operator — the pregel kernel, the driver-side round
+loops (Borůvka MSF, the two matchings, Jones–Plassmann coloring, Luby
+MIS, k-truss peeling) and alternating-star components — runs
+inside one :class:`LoopGear`, and every data-sized width comes from
+:func:`width_for`. Giraph makes the same decision in one place too
+(``USER_PARTITION_COUNT``, ``conf/GiraphConstants.java:914``, default
+workers²); a DataFrame loop sizes it from the *data*: at small scale
+per-task scheduling overhead dominates (measured: PageRank sf0.1 runs 3×
+faster on 8 partitions than 32 on a 32-core local box), while at cluster
+scale ``ceil(rows / ROWS_PER_PARTITION)`` exceeds any sane ceiling and
+the session setting governs.
 
-Why AQE doesn't already do this: with
-``spark.sql.adaptive.coalescePartitions.parallelismFirst`` (default
-true) AQE coalesces small shuffles only down to the default
-parallelism — 32 on a 32-core box — precisely to preserve parallelism,
-so a 50-row round still schedules 32 tasks per exchange. And inside a
-checkpoint-truncated loop AQE must be OFF anyway (pregel.py:140-151:
-AdaptiveSparkPlanExec's undecided output partitioning at checkpoint
-time breaks exchange reuse). :class:`LoopGear` therefore manages both:
-AQE off + explicit width for the loop's duration, both restored on any
-exit.
+Why AQE is off in-loop: with AQE on, ``localCheckpoint`` wraps the
+per-round state in a LogicalRDD with UNKNOWN partitioning
+(AdaptiveSparkPlanExec's output partitioning is undecided at checkpoint
+time), so every later join re-shuffles the state. With AQE off the
+checkpoint keeps ``HashPartitioning(id)`` and the state side of each join
+is exchange-free — Giraph's "vertices stay put, only messages move".
+AQE's coalescing would not help anyway: with
+``spark.sql.adaptive.coalescePartitions.parallelismFirst`` (default true)
+it coalesces only down to the default parallelism, so a 50-row round
+still schedules one task per core per exchange. The gear is the same
+decision made explicitly: the width follows the live set down (and back
+up), with 2× hysteresis bounding re-plans to O(log width) per run.
 
-Unlike the kernel (whose frontier can regrow, hence the declining-only
-gate), these loops' live sets are monotone, so the gear may step down
-immediately; the 2× hysteresis still bounds re-plans to O(log width)
-per run. The width never drops below ``floor_rows / ROWS_PER_PARTITION``
-— the per-round O(V) state rewrite must not serialize.
+SESSION-GLOBAL WINDOW (deliberate): both settings are session conf, so
+OTHER queries submitted on the SAME SparkSession while a loop is in
+flight see its shuffle width (and AQE off) until the loop exits; both are
+restored on any exit, error included. This is not avoidable from inside
+the loop — an aggregation's exchange width has no per-operator override,
+and pre-repartitioning the kernel's raw message stream to dodge the conf
+would pay the delivery shuffle before map-side combining (measured
+strictly worse; see ``pregel(skew_metrics=)``). Concurrent OLAP work
+should run on ``spark.newSession()`` (same SparkContext and cache,
+isolated SQL conf), which is free; the loop itself is unaffected by
+either choice.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..pregel import ROWS_PER_PARTITION
+# Auto-partitioning target: loops size their shuffles so each task
+# carries about this many edge/message rows.
+ROWS_PER_PARTITION = 150_000
+
+
+def width_for(rows: int, ceiling: int) -> int:
+    """Shuffle width for ``rows`` live rows: ``ceil(rows /
+    ROWS_PER_PARTITION)``, at least 1 and at most ``ceiling`` (the
+    cluster-scale width the session is configured with)."""
+    return max(1, min(ceiling, -(-rows // ROWS_PER_PARTITION)))
+
+
+def session_width(spark: SparkSession) -> int:
+    """The session's configured ``spark.sql.shuffle.partitions`` — the
+    ceiling every data-sized width is capped by."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
 class LoopGear:
-    """Context manager: ``with LoopGear(spark) as gear:`` around a round
-    loop; call ``gear.resize(live_rows)`` once per round with the live
-    set size in the unit that dominates the round's shuffles (live
-    EDGES for edge-relation loops; live vertices × avg degree when only
-    a vertex count is at hand). Sets ``floor_rows`` (typically |V|) as
-    soon as the loop learns it.
+    """Context manager: ``with LoopGear(spark, width=n) as gear:`` around
+    a round loop. Turns AQE off and sets the shuffle width to ``width``
+    (default: the session's width) for the loop's duration; ``width`` is
+    also the ceiling the gear never exceeds. Both settings are restored
+    on any exit (see the module docstring for the session-global window
+    this opens).
 
-    Mutates the session's ``spark.sql.shuffle.partitions`` /
-    ``spark.sql.adaptive.enabled`` for the loop's duration and restores
-    them on exit — the same session-global window the pregel kernel
-    documents (pregel.py:161-172); concurrent OLAP belongs on
-    ``spark.newSession()``.
+    Call ``gear.resize(live_rows)`` once per round with the live set size
+    in the unit that dominates the round's shuffles (live EDGES for
+    edge-relation loops; live vertices × avg degree when only a vertex
+    count is at hand). Set ``floor_rows`` (typically |V|) as soon as the
+    loop learns it: the width never drops below ``width_for(floor_rows)``,
+    so the per-round O(V) state rewrite does not serialize.
     """
 
-    def __init__(self, spark: SparkSession, floor_rows: int | None = None):
+    def __init__(
+        self,
+        spark: SparkSession,
+        width: int | None = None,
+        floor_rows: int | None = None,
+    ):
         self.spark = spark
+        self.width = width
         self.floor_rows = floor_rows
         self._aqe_before: str | None = None
         self._parts_before: str | None = None
@@ -62,9 +95,9 @@ class LoopGear:
         conf = self.spark.conf
         self._aqe_before = conf.get("spark.sql.adaptive.enabled", "true")
         self._parts_before = conf.get("spark.sql.shuffle.partitions", "200")
-        self.ceiling = int(self._parts_before)
-        self.cur = self.ceiling
+        self.ceiling = self.cur = self.width or int(self._parts_before)
         conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.shuffle.partitions", str(self.cur))
         return self
 
     def __exit__(self, *exc) -> None:
@@ -73,22 +106,20 @@ class LoopGear:
             "spark.sql.shuffle.partitions", self._parts_before
         )
 
-    def resize(self, live_rows: int) -> int:
+    def resize(self, live_rows: int, declining: bool = True) -> int:
         """Re-fit the loop's shuffle width to ``live_rows``; returns the
         width now in force. 2× hysteresis both ways; floor at the state
-        rewrite's need; ceiling at the session's configured width."""
-        floor = (
-            1
-            if self.floor_rows is None
-            else max(
-                1,
-                min(self.ceiling, -(-self.floor_rows // ROWS_PER_PARTITION)),
-            )
-        )
-        want = max(
-            floor, min(self.ceiling, -(-live_rows // ROWS_PER_PARTITION))
-        )
-        if want * 2 <= self.cur or want >= self.cur * 2:
+        rewrite's need; ceiling at the loop's starting width.
+
+        ``declining=False`` holds the width during a ramp-up: a loop
+        whose live set can regrow (the kernel's frontier fans out by the
+        average degree each superstep) passes whether its count fell
+        since the last round, and gearing down just before the explosion
+        would serialize the heavy rounds (measured 1.5× slower). Gear-up
+        is always allowed. Monotone loops keep the default and step down
+        at once."""
+        want = width_for(max(live_rows, self.floor_rows or 0), self.ceiling)
+        if (want * 2 <= self.cur and declining) or want >= self.cur * 2:
             self.cur = want
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions", str(self.cur)

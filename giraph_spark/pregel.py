@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .graph import Graph
+from .plans.gear import LoopGear, session_width, width_for
 
 MSG = "_msg"
 HAS_MSG = "_has_msg"
@@ -108,71 +109,31 @@ def _resolve(expr: Any, ctx: PregelContext) -> Any:
     return expr(ctx) if callable(expr) and not isinstance(expr, Column) else expr
 
 
-# Auto-partitioning target: the kernel sizes its shuffles so each task
-# carries about this many edge/message rows. AQE's coalescing would do
-# this adaptively, but AQE must stay off inside the loop (see pregel());
-# this is the same decision made statically, once per run.
-ROWS_PER_PARTITION = 150_000
-
-
-def _auto_partitions(graph: Graph, conf_parts: int) -> int:
-    """Size the run's shuffle-partition count from the graph, bounded
-    above by the session's ``spark.sql.shuffle.partitions`` (the
-    cluster-scale ceiling the user configured). Giraph sizes partition
-    count from the worker fleet (``USER_PARTITION_COUNT`` default
-    workers², ``conf/GiraphConstants.java:914``); a DataFrame loop wants
-    it sized from the *data*: at small scale, per-task scheduling
-    overhead dominates (measured: PageRank sf0.1 runs 3× faster on 8
-    partitions than 32 on a 32-core local box), while at cluster scale
-    ``ceil(edges / ROWS_PER_PARTITION)`` exceeds any sane ceiling and
-    the session setting governs. The one edge count this costs per run
-    is Giraph's input-superstep edge count (``GiraphStats``); on a
-    persisted graph it is a cached-count no-op."""
-    edge_rows = graph.edges.count()
-    return max(1, min(conf_parts, -(-edge_rows // ROWS_PER_PARTITION)))
-
-
 def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame.
     See :func:`_pregel_impl` for the full parameter reference (identical
-    signature; this wrapper only manages session config).
+    signature; this wrapper only picks the loop's width).
 
-    AQE is disabled for the duration of the loop (restored on exit, even on
-    error): with AQE on, ``localCheckpoint`` wraps the per-superstep state
-    in a LogicalRDD with UNKNOWN partitioning (AdaptiveSparkPlanExec's
-    output partitioning is undecided at checkpoint time), so every
-    subsequent join re-shuffles the state. With AQE off the checkpoint
-    preserves ``HashPartitioning(id)`` and the inbox/triplet joins are
-    exchange-free on the state side — Giraph's "vertices stay put, only
-    messages move" model. AQE's skew handling is not missed inside the
-    loop: with a message combiner, map-side partial aggregation collapses
-    each dst's fan-in to ≤ num_partitions rows before the shuffle,
-    structurally bounding skew (and :func:`giraph_spark.partitioning.salt_heavy_keys`
-    covers the combiner-less case).
+    The run executes inside one :class:`~giraph_spark.plans.gear.LoopGear`:
+    AQE off and the session's shuffle width set to the run's width, both
+    restored on any exit (why, and the session-global window this opens:
+    the ``plans/gear.py`` module docstring). AQE's skew handling is not
+    missed inside the loop: with a message combiner, map-side partial
+    aggregation collapses each dst's fan-in to ≤ num_partitions rows
+    before the shuffle, structurally bounding skew (and
+    :func:`giraph_spark.partitioning.salt_heavy_keys` covers the
+    combiner-less case).
 
-    ``num_partitions`` fixes the loop's shuffle-partition count; the
-    default auto-sizes it from the edge count (:func:`_auto_partitions`),
-    standing in for the coalescing AQE would have done. The session's
-    ``spark.sql.shuffle.partitions`` is set to the chosen value for the
-    duration of the run (and restored), so every loop shuffle — inbox
-    groupBy, co-partitioned joins, the cached edge repartition — agrees
-    on one partitioning and the state side stays exchange-free.
-
-    SESSION-GLOBAL WINDOW (deliberate): both this setting and the
-    adaptive gear-down's re-sizing mutate the shared session conf, so
-    OTHER queries submitted on the SAME SparkSession while a pregel run
-    is in flight see the altered shuffle width (and AQE off) until the
-    run exits. This is not avoidable from inside the loop — the inbox
-    aggregation's exchange width has no per-operator override, and
-    pre-repartitioning the raw message stream to dodge the conf would
-    pay the delivery shuffle before map-side combining (measured
-    strictly worse; see ``skew_metrics``). Concurrent OLAP work should
-    run on ``spark.newSession()`` (same SparkContext and cache, isolated
-    SQL conf), which is free; the pregel run itself is unaffected by
-    either choice."""
+    ``num_partitions`` fixes the run's starting width; the default sizes
+    it from the edge count (:func:`~giraph_spark.plans.gear.width_for`,
+    capped by the session's ``spark.sql.shuffle.partitions``), standing
+    in for the coalescing AQE would have done. The one edge count this
+    costs per run is Giraph's input-superstep edge count (``GiraphStats``);
+    on a persisted graph it is a cached-count no-op. Every loop shuffle —
+    inbox groupBy, co-partitioned joins, the cached edge repartition —
+    agrees on that width, so the state side stays exchange-free; the
+    gear then follows the message volume down (step 9 of the loop)."""
     spark = graph.vertices.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
     if num_partitions is not None:
         nparts = num_partitions
     elif graph.edges_layout is not None:
@@ -180,26 +141,25 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
         # the loop partitioning and the input repartition disappears
         nparts = graph.edges_layout[1]
     else:
-        nparts = _auto_partitions(graph, int(parts_before))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
+        nparts = width_for(graph.edges.count(), session_width(spark))
     # Every frame the run persists is registered here and released on ANY
     # exit — normal return, master_fn exception, executor loss. Without
     # this, a failed attempt (exactly the case run_with_retries exists
     # for) would leave the cached edge relation + message frames in the
     # block manager, and retries would stack copies until OOM.
     persisted: list[DataFrame] = []
-    try:
-        return _pregel_impl(graph, _persist_registry=persisted, **kwargs)
-    finally:
-        for df in persisted:
-            try:
-                df.unpersist()  # no-op if already released in-loop
-            except Exception:
-                pass
-        gc.collect()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
+    with LoopGear(spark, width=nparts) as gear:
+        try:
+            return _pregel_impl(
+                graph, _gear=gear, _persist_registry=persisted, **kwargs
+            )
+        finally:
+            for df in persisted:
+                try:
+                    df.unpersist()  # no-op if already released in-loop
+                except Exception:
+                    pass
+            gc.collect()
 
 
 def _hadoop_fs(spark, path: str):
@@ -355,7 +315,6 @@ def _pregel_impl(
     halt_file: str | None = None,
     max_supersteps: int = 100,
     start_superstep: int = 0,
-    adaptive_partitions: bool = True,
     checkpoint_every: int = 6,
     checkpoint_dir: str | None = None,
     state_checkpoint_dir: str | None = None,
@@ -364,6 +323,7 @@ def _pregel_impl(
     _resume_vertices: DataFrame | None = None,
     _resume_messages: DataFrame | None = None,
     _persist_registry: list[DataFrame] | None = None,
+    _gear: LoopGear,
 ) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame
     (engine columns dropped).
@@ -480,22 +440,12 @@ def _pregel_impl(
         ``{state_checkpoint_dir}/HALT`` when ``state_checkpoint_dir`` is
         set. Request a halt from outside the driver with
         :func:`request_halt`.
-    adaptive_partitions:
-        when true (default), the loop re-sizes its shuffle-partition count
-        from the live message volume: after a superstep whose
-        ``num_messages`` implies a partition count ≥2× smaller (or larger)
-        than the current one, the session shuffle setting is changed and
-        the vertex state re-keyed once at the new width. This is the
-        frontier-collapse optimization: SSSP/BFS/WCC frontiers shrink by
-        orders of magnitude in their tail supersteps, and without AQE
-        (which must stay off in-loop) every tail superstep would otherwise
-        pay the full-width task count for near-empty shuffles — at cluster
-        scale, tens of thousands of empty tasks per superstep. The 2×
-        hysteresis bounds re-key shuffles to O(log width) per run; the
-        cached edge relation keeps its original width (EnsureRequirements
-        re-shuffles the tiny frontier side up to meet it, never the edges).
-        Mirrors the adaptive compute-thread/partition sizing Giraph gets
-        from per-worker message stores draining in place.
+    num_partitions:
+        (on :func:`pregel`) the run's starting shuffle width. Step 9 of
+        the loop re-sizes it from the live message volume and re-keys the
+        vertex state once at each new width; the rules (2× hysteresis, no
+        gear-down during ramp-up) and the session-global window are in
+        the ``plans/gear.py`` module docstring.
     state_checkpoint_dir:
         when set, every ``checkpoint_every``-th superstep the post-update
         vertex state AND the in-flight messages are written as parquet under
@@ -537,9 +487,7 @@ def _pregel_impl(
     # input time (edge store move, BspServiceWorker.java:611). The state
     # side stays hash-partitioned on id because checkpoint/localCheckpoint
     # preserves the physical partitioning from the inbox join.
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    cur_n = nparts  # live gear; shrinks/grows with the frontier (see below)
-    v_floor: int | None = None  # computed lazily at the first gear decision
+    nparts = _gear.cur
     prev_msg_count: int | None = None
     reg = _persist_registry if _persist_registry is not None else []
 
@@ -801,7 +749,7 @@ def _pregel_impl(
                 "superstep": superstep,
                 "vertices": ctx.num_vertices,
                 "messages": ctx.num_messages,
-                "partitions": cur_n,
+                "partitions": _gear.cur,
                 "seconds": time.monotonic() - t0,
                 **(skew_row or {}),
             }
@@ -863,30 +811,19 @@ def _pregel_impl(
 
         # 9. Adaptive gear change: re-size the loop's shuffle width from
         #    the live message volume (frontier collapse). Gearing down is
-        #    gated on a DECLINING message count — during ramp-up the
-        #    frontier fans out by the average degree each superstep, and
-        #    gearing down just before the explosion serializes the heavy
-        #    supersteps (measured 1.5× slower). The width never drops
-        #    below what the per-superstep O(V) state rewrite needs. Gear-up
-        #    is always allowed (guards against post-decline regrowth). The
-        #    2× hysteresis bounds state re-keys to O(log nparts) per run;
-        #    each re-key exchange folds into the next superstep's job.
-        if adaptive_partitions and new_messages is not None:
-            if v_floor is None:
-                v_floor = max(
-                    1,
-                    min(nparts, -(-vertices.count() // ROWS_PER_PARTITION)),
-                )
+        #    gated on a DECLINING message count (the frontier fans out by
+        #    the average degree during ramp-up); the width never drops
+        #    below what the per-superstep O(V) state rewrite needs. Each
+        #    state re-key exchange folds into the next superstep's job.
+        if new_messages is not None:
+            if _gear.floor_rows is None:
+                _gear.floor_rows = vertices.count()
+            width = _gear.cur
             declining = prev_msg_count is not None and (
                 ctx.num_messages < prev_msg_count
             )
-            want = max(
-                v_floor, min(nparts, -(-ctx.num_messages // ROWS_PER_PARTITION))
-            )
-            if (want * 2 <= cur_n and declining) or want >= cur_n * 2:
-                cur_n = want
-                spark.conf.set("spark.sql.shuffle.partitions", str(cur_n))
-                vertices = vertices.repartition(cur_n, F.col(id_col))
+            if _gear.resize(ctx.num_messages, declining) != width:
+                vertices = vertices.repartition(_gear.cur, F.col(id_col))
             prev_msg_count = ctx.num_messages
 
     return vertices.drop(MSG, HAS_MSG, HALTED, ACTIVE)

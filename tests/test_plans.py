@@ -139,16 +139,18 @@ def test_auto_partition_sizing(spark, sf_dir):
     avoidance — measured 3x on sf0.1), while the session's
     spark.sql.shuffle.partitions remains the large-graph ceiling, and
     the session setting is restored after the run."""
-    from giraph_spark.pregel import ROWS_PER_PARTITION, _auto_partitions
+    from giraph_spark.plans.gear import ROWS_PER_PARTITION, width_for
 
     g = trade_graph(spark, sf_dir)
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_edges = g.edges.count()
-    auto = _auto_partitions(g, conf_parts)
+    auto = width_for(n_edges, conf_parts)
     assert auto == max(1, min(conf_parts, -(-n_edges // ROWS_PER_PARTITION)))
     before = spark.conf.get("spark.sql.shuffle.partitions")
+    metrics = PregelMetrics()
     pregel(
         g,
+        metrics=metrics,
         initial={"value": F.lit(0.0)},
         update={"value": F.col("value")},
         send_msg=F.col("value"),
@@ -156,6 +158,7 @@ def test_auto_partition_sizing(spark, sf_dir):
         vote_to_halt=F.lit(True),
         max_supersteps=1,
     )
+    assert metrics.supersteps[0]["partitions"] == auto
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -477,8 +480,7 @@ def test_loop_gear_resizes_and_restores(spark):
     """LoopGear: disables AQE + resizes shuffle width with hysteresis
     for the loop's duration, restores both on exit (also on error); the
     width never drops below the floor_rows requirement."""
-    from giraph_spark.plans.gear import LoopGear
-    from giraph_spark.pregel import ROWS_PER_PARTITION
+    from giraph_spark.plans.gear import ROWS_PER_PARTITION, LoopGear
 
     conf = spark.conf
     parts0 = conf.get("spark.sql.shuffle.partitions")
@@ -506,6 +508,69 @@ def test_loop_gear_resizes_and_restores(spark):
         pass
     assert conf.get("spark.sql.shuffle.partitions") == parts0
     assert conf.get("spark.sql.adaptive.enabled") == aqe0
+    # an explicit width is both the starting width and the ceiling; the
+    # ramp-up guard (declining=False) holds it until the count falls
+    with LoopGear(spark, width=3) as gear:
+        assert conf.get("spark.sql.shuffle.partitions") == "3"
+        assert gear.resize(1, declining=False) == 3
+        assert gear.resize(1) == 1
+        assert gear.resize(ROWS_PER_PARTITION * 10_000, declining=False) == 3
+    assert conf.get("spark.sql.shuffle.partitions") == parts0
+
+
+def test_loops_restore_session_conf(spark):
+    """The pregel kernel (also when master_fn raises) and
+    alternating_star_components run inside LoopGear, so each leaves
+    spark.sql.adaptive.enabled and spark.sql.shuffle.partitions as it
+    found them."""
+    import pytest
+
+    from giraph_spark import Graph
+    from giraph_spark.algos.components import alternating_star_components
+
+    conf = spark.conf
+    parts0 = conf.get("spark.sql.shuffle.partitions")
+    aqe0 = conf.get("spark.sql.adaptive.enabled")
+    vertices = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (3, 4)], "src long, dst long"
+    )
+    g = Graph(vertices, edges)
+    seen = {}
+
+    def master_fn(ctx):
+        seen["in_loop"] = (
+            conf.get("spark.sql.adaptive.enabled"),
+            conf.get("spark.sql.shuffle.partitions"),
+        )
+        raise RuntimeError("master failed")
+
+    try:
+        # distinctive values, so a restore to defaults cannot pass
+        conf.set("spark.sql.shuffle.partitions", "7")
+        conf.set("spark.sql.adaptive.enabled", "true")
+        with pytest.raises(RuntimeError, match="master failed"):
+            pregel(
+                g,
+                initial={"value": F.col("id")},
+                update={"value": F.least(F.col("value"), F.col("_msg"))},
+                send_msg=F.col("value"),
+                combine=F.min,
+                master_fn=master_fn,
+            )
+        assert seen["in_loop"] == ("false", "1")
+        assert conf.get("spark.sql.shuffle.partitions") == "7"
+        assert conf.get("spark.sql.adaptive.enabled") == "true"
+
+        out = alternating_star_components(g)
+        assert {r["id"]: r["component"] for r in out.collect()} == {
+            0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5
+        }
+        assert conf.get("spark.sql.shuffle.partitions") == "7"
+        assert conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        conf.set("spark.sql.shuffle.partitions", parts0)
+        conf.set("spark.sql.adaptive.enabled", aqe0)
 
 
 def test_bcast_if_small_plan_shapes(spark):

@@ -6,7 +6,8 @@ capped to keep Spark-job count sane."""
 import hashlib
 import re
 
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from giraph_spark.functions.dedup import normalize_text, portable_hash60
@@ -474,16 +475,28 @@ def _py_robots_allowed(groups, agent: str, path: str) -> bool:
     """Pure-Python RFC 9309 model: the exact-agent group(s) govern iff
     any group names the agent, else the ``*`` group(s); among matching
     rules longest pattern wins, allow wins a length tie; no matching
-    rule means allowed."""
+    rule means allowed.
+
+    Groups follow the RFC's ABNF (section 2.2),
+    ``group = startgroupline *(startgroupline / emptyline) *(rule /
+    emptyline)``: a rule-less run of user-agent lines is not a group of
+    its own — it joins the next group's agents, blank lines between them
+    notwithstanding."""
     import re as _re
 
-    def governs(agents):
-        return agent in agents
+    merged, pending = [], []
+    for agents, lines in groups:
+        pending = pending + list(agents)
+        if lines:
+            merged.append((pending, lines))
+            pending = []
+    if pending:
+        merged.append((pending, []))
 
-    has_exact = any(governs(a) for a, _ in groups)
+    has_exact = any(agent in agents for agents, _ in merged)
     rules = [
         (rule, pat)
-        for agents, lines in groups
+        for agents, lines in merged
         for rule, pat in lines
         if ((agent in agents) if has_exact else ("*" in agents))
     ]
@@ -499,16 +512,7 @@ def _py_robots_allowed(groups, agent: str, path: str) -> bool:
     return True if best is None else best[1]
 
 
-@given(
-    st.lists(_RP_GROUP, min_size=1, max_size=3),
-    st.lists(_RP_PATH, min_size=1, max_size=10),
-)
-@settings(**SETTINGS)
-def test_robots_verdict_matches_python_rfc_model(spark, groups, paths):
-    """parse_robots + robots_verdict against an independent Python
-    RFC 9309 model on generated group files and paths — group
-    selection, longest-match, allow-tie, wildcard/anchor compilation
-    all pinned on arbitrary inputs."""
+def _check_robots_verdict(spark, groups, paths):
     from giraph_spark.functions.urls import parse_robots, robots_verdict
 
     text = "\n".join(
@@ -531,6 +535,37 @@ def test_robots_verdict_matches_python_rfc_model(spark, groups, paths):
     for i, p in enumerate(paths):
         want = _py_robots_allowed(groups, "mybot", p)
         assert got[i] == want, (text, p, got[i], want)
+
+
+_RP_GROUPS = st.lists(_RP_GROUP, min_size=1, max_size=3)
+_RP_PATHS = st.lists(_RP_PATH, min_size=1, max_size=10)
+
+
+@given(groups=_RP_GROUPS, paths=_RP_PATHS)
+# a rule-less user-agent line followed, across a blank line, by a group
+# with rules: one group per RFC 9309, so mybot is governed by Disallow /a
+@example(
+    groups=[(["mybot"], []), (["*"], [("disallow", "/a")])], paths=["/a"]
+)
+@settings(**SETTINGS, derandomize=True)
+def test_robots_verdict_matches_python_rfc_model(spark, groups, paths):
+    """parse_robots + robots_verdict against an independent Python
+    RFC 9309 model on generated group files and paths — group
+    selection, longest-match, allow-tie, wildcard/anchor compilation
+    all pinned on arbitrary inputs. Derandomized, so the default tier
+    is reproducible; the randomized budget runs under ``slow``."""
+    _check_robots_verdict(spark, groups, paths)
+
+
+@pytest.mark.slow
+@given(groups=_RP_GROUPS, paths=_RP_PATHS)
+@settings(max_examples=30, deadline=None, print_blob=True)
+def test_robots_verdict_matches_python_rfc_model_randomized(
+    spark, groups, paths
+):
+    """The same property with a larger randomized budget; a failure
+    prints the blob that reproduces it (``@reproduce_failure``)."""
+    _check_robots_verdict(spark, groups, paths)
 
 
 # ---- r11: SURT keys, sequence spans, banded pairs, IDNA ----
