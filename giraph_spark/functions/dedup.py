@@ -138,7 +138,14 @@ def minhash_signatures(
     exploded relation (map-side partial aggregation keeps the shuffle
     small: num_hashes longs per doc). ``portable=True`` swaps xxhash64
     for :func:`portable_hash60` so a SQL oracle can replicate the exact
-    signatures."""
+    signatures.
+
+    Precondition: ``id_col`` identifies ONE document per row. The
+    default (xxhash64) mode signs each row on its own in one Arrow batch
+    pass, so rows that share an id get one signature row each, computed
+    from that row's shingles alone; the ``portable=True`` groupBy would
+    instead union their shingle sets into one signature. Deduplicate or
+    concatenate same-id rows before calling."""
     if not portable:
         # xxhash64 mode (the production default): a document's
         # signature depends only on its own shingle set, so the
@@ -150,11 +157,6 @@ def minhash_signatures(
         # then hashInt of the int literal), each distinct shingle per
         # batch hashed once, vectorized by length group; the per-seed
         # family is one ``xxh64_int32`` vector op per seed.
-        # Precondition (same contract as the portable explode form's
-        # groupBy, stated because the row-local pass cannot merge):
-        # ``id_col`` identifies one document per row — duplicate-id
-        # rows would have had their shingle sets unioned by the old
-        # groupBy and now sign independently.
         return _minhash_signatures_arrow(df, text_col, id_col, k, num_hashes)
     sh = shingle_df(df, text_col, id_col, k)
     hfn = lambda seed: portable_hash60(F.col("shingle"), seed)  # noqa: E731
@@ -262,7 +264,12 @@ def minhash_lsh_pairs(
     This is the 100 TB dedup path (the exact Jaccard operator is its
     correctness oracle at sample scale). ``portable=True`` uses
     md5-derived shingle hashes and the raw concatenated band string as the
-    bucket key, so a SQL oracle replays the identical candidate set."""
+    bucket key, so a SQL oracle replays the identical candidate set.
+
+    Precondition (from :func:`minhash_signatures`): ``id_col``
+    identifies ONE document per row. In the default xxhash64 mode,
+    rows that share an id are signed separately and their shingle sets
+    are never unioned."""
     rows = num_hashes // bands
     sig = minhash_signatures(
         df, text_col, id_col, k, num_hashes, portable=portable

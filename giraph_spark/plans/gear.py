@@ -136,7 +136,11 @@ class LoopGear:
 # entries per row, so 4M rows may be GBs, not tens of MB). Narrow loop
 # rows (two ids + a weight) serialize to a few tens of bytes including
 # hash-relation overhead; callers with variable-width columns pass the
-# element total via ``extra_bytes``.
+# element total via ``extra_bytes``. The same budget decides where
+# Borůvka MSF merges its components (algos/mst.py): a component
+# relation of ``n_v × ROW_BYTES_NARROW`` bytes within it is collected
+# and merged on the driver — the round's one job plus one broadcast
+# comp→root relabel — and past it stays a DataFrame merge.
 ROW_BYTES_NARROW = 32
 ARRAY_ELEM_BYTES = 8
 _LIMIT_FLOOR = 64 << 20

@@ -27,15 +27,43 @@ def _kruskal(vertex_ids, canonical_edges):
     return forest
 
 
-def test_msf_matches_kruskal_on_trade_graph(spark, sf_dir):
+def _msf_both_sides_of_the_gate(monkeypatch, graph):
+    """Run MSF with its component merge on the driver (the session's
+    broadcast budget) and past the broadcast gate (a zero budget, so
+    the DataFrame merge runs); check each run took its path and both
+    give the same forest and round count. Returns ``(forest, rounds)``
+    with the forest as a set of ``(u, v, weight)``."""
+    from giraph_spark.algos import mst
+
+    runs = []
+    for budget, merge in ((None, "_merge_on_driver"), (0, "_merge_frames")):
+        with monkeypatch.context() as m:
+            if budget is not None:
+                m.setattr(
+                    mst, "broadcast_limit_bytes", lambda spark=None: budget
+                )
+            calls = []
+            real = getattr(mst, merge)
+            m.setattr(mst, merge, lambda *a: calls.append(1) or real(*a))
+            stats = {}
+            forest = {
+                (r.u, r.v, r.weight)
+                for r in mst.minimum_spanning_forest(
+                    graph, stats=stats
+                ).collect()
+            }
+            assert calls, merge
+            runs.append((forest, stats.get("rounds")))
+    assert runs[0] == runs[1]
+    return runs[0]
+
+
+def test_msf_matches_kruskal_on_trade_graph(spark, sf_dir, monkeypatch):
     import __spark_entry__ as E
 
     g = E.trade_graph(spark, sf_dir, directed=True)
-    stats = {}
-    got = {
-        (r.u, r.v, round(r.weight, 2))
-        for r in minimum_spanning_forest(g, stats=stats).collect()
-    }
+    forest, rounds = _msf_both_sides_of_the_gate(monkeypatch, g)
+    got = {(u, v, round(w, 2)) for u, v, w in forest}
     ce = (
         g.edges.where(F.col("src") != F.col("dst"))
         .select(
@@ -53,12 +81,14 @@ def test_msf_matches_kruskal_on_trade_graph(spark, sf_dir):
     )
     assert got == want
     # Borůvka is O(log n) rounds — the dense trade graph merges fast
-    assert stats["rounds"] <= 5
+    assert rounds <= 5
 
 
-def test_msf_parallel_edges_and_forest_shape(spark):
+def test_msf_parallel_edges_and_forest_shape(spark, monkeypatch):
     """Parallel edges keep the lightest; a disconnected graph yields one
-    tree per component (n - n_components edges)."""
+    tree per component (n - n_components edges); an edge to an id
+    missing from the vertices is ignored — on both sides of the
+    broadcast gate."""
     edges = spark.createDataFrame(
         [
             # component {1,2,3}: parallel 1-2 edges (keep w=1.0),
@@ -71,18 +101,20 @@ def test_msf_parallel_edges_and_forest_shape(spark):
             (10, 11, 7.0),
             # isolated self-loop is ignored
             (20, 20, 1.0),
+            # 99 is not a vertex: the lightest edge, yet never picked
+            (3, 99, 0.5),
         ],
         "src long, dst long, weight double",
     )
     vertices = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 20)], "id long"
     )
-    out = sorted(
-        (r.u, r.v, r.weight)
-        for r in minimum_spanning_forest(Graph(vertices, edges)).collect()
+    forest, rounds = _msf_both_sides_of_the_gate(
+        monkeypatch, Graph(vertices, edges)
     )
     # 6 vertices, 3 components -> 3 forest edges; 1-3 beats 2-3 on (w,u,v)
-    assert out == [(1, 2, 1.0), (1, 3, 2.0), (10, 11, 7.0)]
+    assert sorted(forest) == [(1, 2, 1.0), (1, 3, 2.0), (10, 11, 7.0)]
+    assert rounds == 1
 
 
 def test_msf_empty_graph(spark):
